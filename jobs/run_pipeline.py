@@ -2,7 +2,8 @@
 """spark-submit entry point for the KG-construction pipeline.
 
 This is the deployment surface the design targets (BASELINE north rule:
-"run via spark-submit --py-files on a multi-executor cluster"):
+"run via spark-submit --py-files on a multi-executor cluster"), and the
+only job entry in the repository:
 
     cd /path/to/repo && zip -r /tmp/kgraph_spark.zip kgraph_spark
     spark-submit --master <cluster-master> \
@@ -16,15 +17,18 @@ This is the deployment surface the design targets (BASELINE north rule:
 The script deliberately sets NO master and no local-mode memory tuning:
 spark-submit owns cluster choice and sizing (local[*] / YARN / k8s), and
 the package reaches the driver and every Python worker through --py-files
-— no repo checkout on the cluster. The session factory's AQE / Arrow /
-broadcast settings are applied as session confs (safe post-submit).
+— no repo checkout on the cluster. The shared session settings
+(kgraph_spark.session.SESSION_CONF: AQE / Arrow / UTC / broadcast) are
+applied as session confs (safe post-submit).
 
 Modes:
-  * default        — one-shot: run_pipeline + write_bundle(--output).
+  * default        — one-shot: run_pipeline, then write_bundle of all four
+    tables (entities, relationships, mentions, evidence) to --output.
   * --checkpoint-dir — resumable: sharded, committed extraction
     (lineage.checkpointed_pipeline); re-running the SAME command after a
-    kill recomputes only the missing shards. Triples + lineage + stage
-    metrics land under the checkpoint dir, and the bundle under --output.
+    kill recomputes only the missing shards. The checkpoint dir holds
+    extracted/ shards, lineage/ and metrics/; --output gets a bundle with
+    the relationships table only.
 
 Input table shape (BASELINE input_hint): documents parquet with
 (doc_id, spans:array<struct<kind,text,media_ref,offset>>); --synth N
@@ -35,7 +39,8 @@ driver — the reference KB dictionaries are a few MB, and anything beyond
 broadcast size belongs in the alias-index join path, not here.
 
 Exit: prints ONE JSON line {"docs": N, "triples": N, "entities": N,
-"sec": S} on success.
+"sec": S} on success, with counts from the bundle manifest ("entities" is
+null in --checkpoint-dir mode).
 """
 
 from __future__ import annotations
@@ -49,19 +54,9 @@ import time
 def build_session(app_name: str, shuffle_partitions: int | None):
     from pyspark.sql import SparkSession
 
-    builder = SparkSession.builder.appName(app_name)
-    # session-level (non-cluster) settings only; master/memory/executors
-    # belong to spark-submit
-    for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    }.items():
-        builder = builder.config(k, v)
+    from kgraph_spark.session import SESSION_CONF
+
+    builder = SparkSession.builder.appName(app_name).config(map=SESSION_CONF)
     if shuffle_partitions:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return builder.getOrCreate()
@@ -112,32 +107,25 @@ def main(argv: list[str] | None = None) -> int:
     if args.checkpoint_dir:
         from kgraph_spark.lineage import checkpointed_pipeline
 
-        triples = checkpointed_pipeline(
+        manifest = checkpointed_pipeline(
             spark,
             docs,
             gaz_rows,
             args.checkpoint_dir,
+            args.output,
             n_shards=args.shards,
             fail_after=args.fail_after_shards,
         )
-        write_bundle({"relationships": triples}, args.output)
-        out = {
-            "docs": n_docs,
-            "triples": triples.count(),
-            "entities": None,
-            "sec": round(time.time() - t0, 2),
-        }
     else:
         from kgraph_spark.pipeline import run_pipeline
 
-        result = run_pipeline(spark, docs, gaz_rows)
-        manifest = write_bundle(result.tables, args.output)
-        out = {
-            "docs": n_docs,
-            "triples": manifest["counts"].get("relationships"),
-            "entities": manifest["counts"].get("entities"),
-            "sec": round(time.time() - t0, 2),
-        }
+        manifest = write_bundle(run_pipeline(spark, docs, gaz_rows).tables, args.output)
+    out = {
+        "docs": n_docs,
+        "triples": manifest["counts"]["relationships"],
+        "entities": manifest["counts"].get("entities"),
+        "sec": round(time.time() - t0, 2),
+    }
     print(json.dumps(out), flush=True)
     return 0
 

@@ -17,16 +17,22 @@ CONCURRENCY.md:96-120). The Spark restatement:
     committed work, generalized;
   * every shard appends a lineage row (stage, shard, docs, rows, seconds,
     status) and every stage a metrics row — both are append-only tables.
+
+checkpointed_pipeline is what `jobs/run_pipeline.py --checkpoint-dir`
+runs: the checkpoint dir holds extracted/ (the committed shards), lineage/
+and metrics/; the relationships table is written once, straight into the
+job's bundle dir.
 """
 
 from __future__ import annotations
 
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
@@ -57,60 +63,49 @@ def run_sharded_stage(
 
     fn: pure transform documents → stage output (must carry doc_id lineage
     implicitly; determinism is guaranteed by the content-hashed ID scheme).
-    fail_after: test hook — raise after N shards to simulate a killed job
-    (forces the sequential path so "after N" is well-defined).
+    fail_after: test hook — commit only the first N pending shards, then
+    raise to simulate a killed job.
 
-    Uncommitted shards are submitted CONCURRENTLY from a small driver
-    thread pool: Spark's scheduler interleaves the independent write jobs,
-    so executors never sit idle between shard commits (the round-1 form ran
-    shards strictly sequentially — at 64+ shards on a cluster the
-    per-shard driver round-trips serialize the fleet). Shard input counts
-    come from ONE groupBy job up front instead of a count() per shard, and
-    lineage rows are buffered and appended once (concurrent appends to one
-    parquet dir race on _temporary). At real scale each shard write is an
-    Iceberg snapshot commit and this loop disappears into table commits.
+    Pending shards are submitted CONCURRENTLY from a small driver thread
+    pool: Spark's scheduler interleaves the independent write jobs, so
+    executors never sit idle between shard commits. Each shard's input and
+    output row counts are observed on its own write job (no count jobs),
+    and lineage rows are buffered and appended once (concurrent appends to
+    one parquet dir race on _temporary). At real scale each shard write is
+    an Iceberg snapshot commit and this loop disappears into table commits.
 
     Returns the stage output DataFrame (reading all committed shards)."""
     out_root = Path(workdir) / stage
-    lineage_path = Path(workdir) / "lineage"
     out_root.mkdir(parents=True, exist_ok=True)
 
     docs = docs.withColumn("_shard", shard_col(F.col("doc_id"), n_shards))
     pending = [
         s for s in range(n_shards) if not (out_root / f"shard={s}" / "_SUCCESS").exists()
     ]  # committed shards skipped — resume = skip-if-exists (I4)
+    to_run = pending if fail_after is None else pending[:fail_after]
 
     lineage_rows: list[tuple] = []
 
-    def _run_one(shard: int, n_docs: int) -> None:
+    def _run_one(shard: int) -> None:
         t0 = time.time()
-        shard_dir = out_root / f"shard={shard}"
-        out = fn(docs.filter(F.col("_shard") == shard).drop("_shard"))
-        out.write.mode("overwrite").parquet(str(shard_dir))
-        n_rows = spark.read.parquet(str(shard_dir)).count()  # footer metadata only
+        n_in = Observation(f"{stage}_{shard}_input")
+        n_out = Observation(f"{stage}_{shard}_output")
+        shard_docs = docs.filter(F.col("_shard") == shard).drop("_shard")
+        out = fn(shard_docs.observe(n_in, F.count(F.lit(1)).alias("n")))
+        out.observe(n_out, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
+            str(out_root / f"shard={shard}")
+        )
         lineage_rows.append(
-            (stage, shard, n_docs, n_rows, round(time.time() - t0, 3), "committed",
-             int(time.time()))
+            (stage, shard, n_in.get["n"], n_out.get["n"], round(time.time() - t0, 3),
+             "committed", int(time.time()))
         )
 
-    if pending:
-        if fail_after is not None:
-            for done, shard in enumerate(pending):
-                if done >= fail_after:
-                    _append_rows(spark, lineage_path, lineage_rows, LINEAGE_SCHEMA)
-                    raise RuntimeError(f"simulated kill after {done} shards")
-                _run_one(shard, docs.filter(F.col("_shard") == shard).count())
-        else:
-            counts = {
-                r["_shard"]: r["count"]
-                for r in docs.groupBy("_shard").count().collect()
-            }
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(len(pending), max_concurrent)) as ex:
-                list(ex.map(lambda s: _run_one(s, counts.get(s, 0)), pending))
-        if lineage_rows:
-            _append_rows(spark, lineage_path, lineage_rows, LINEAGE_SCHEMA)
+    if to_run:
+        with ThreadPoolExecutor(max_workers=min(len(to_run), max_concurrent)) as ex:
+            list(ex.map(_run_one, to_run))
+        _append_rows(spark, Path(workdir) / "lineage", lineage_rows, LINEAGE_SCHEMA)
+    if len(to_run) < len(pending):
+        raise RuntimeError(f"simulated kill after {len(to_run)} shards")
     return spark.read.parquet(str(out_root))
 
 
@@ -134,15 +129,20 @@ def checkpointed_pipeline(
     docs: DataFrame,
     gazetteer_rows: list[tuple],
     workdir: str,
+    out_dir: str,
     n_shards: int = 8,
     cfg=None,
     fail_after: int | None = None,
-):
+) -> dict:
     """Resumable form of pipeline.run_pipeline: the expensive extraction
-    pass is sharded + checkpointed (kill → rerun recomputes only missing
-    shards); downstream graph construction runs from the committed
-    extraction table and its outputs are single atomic commits."""
+    pass is sharded + checkpointed under `workdir` (kill → rerun recomputes
+    only missing shards); graph construction runs from the committed
+    extraction table and its relationships table is one atomic bundle
+    write to `out_dir`. `workdir` keeps extracted/, lineage/ and metrics/.
+
+    Returns the bundle manifest."""
     from kgraph_spark.config import PipelineConfig
+    from kgraph_spark.operators.export import write_bundle
     from kgraph_spark.operators.mentions import extract_all
     from kgraph_spark.pipeline import run_pipeline_from_extracted
 
@@ -159,9 +159,8 @@ def checkpointed_pipeline(
     )
     write_stage_metrics(spark, workdir, "extracted", {"rows": extracted.count()})
     result = run_pipeline_from_extracted(spark, extracted, gazetteer_rows, cfg)
-    triples_dir = Path(workdir) / "triples"
-    result.triples.write.mode("overwrite").parquet(str(triples_dir))
+    manifest = write_bundle({"relationships": result.triples}, out_dir)
     write_stage_metrics(
-        spark, workdir, "triples", {"rows": spark.read.parquet(str(triples_dir)).count()}
+        spark, workdir, "triples", {"rows": manifest["counts"]["relationships"]}
     )
-    return spark.read.parquet(str(triples_dir))
+    return manifest

@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -159,43 +158,44 @@ def assign_merge_keys(entities_with_cache: DataFrame) -> DataFrame:
     and 'index' (final name_key -> cid state, used by the free-form name
     fallback during triple accumulation)."""
 
-    def fold(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["paper_id", "pos"], kind="mergesort")
-            idx: dict[str, str] = {}
-            out: list[tuple[str, str, str, str | None, str]] = []
-            ec = pdf["entity_class"].iloc[0] if len(pdf) else None
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        # the whole group in one frame: Arrow may deliver a large group
+        # in several batches, and first-wins keys need the global order
+        pdf = pdf.sort_values(["paper_id", "pos"], kind="mergesort")
+        idx: dict[str, str] = {}
+        out: list[tuple[str, str, str, str | None, str]] = []
+        ec = pdf["entity_class"].iloc[0] if len(pdf) else None
 
-            def populate(cid: str, n: str) -> None:
-                k = n.lower().strip()
-                if k:
-                    idx[k] = cid
-                nn = _dedup_norm(n)
-                if nn and nn != k:
-                    idx[nn] = cid
+        def populate(cid: str, n: str) -> None:
+            k = n.lower().strip()
+            if k:
+                idx[k] = cid
+            nn = _dedup_norm(n)
+            if nn and nn != k:
+                idx[nn] = cid
 
-            for row in pdf.itertuples(index=False):
-                name = row.name or ""
-                # raw-lower key is NOT stripped on lookup (dedup.py:316)
-                cid = idx.get(name.lower())
-                if cid is None:
-                    cid = idx.get(_dedup_norm(name))
-                if cid is None:
-                    syns = row.synonyms if row.synonyms is not None else []
-                    names = {name} | set(syns)
-                    if row.auth_id:
-                        cid = row.auth_id
-                    elif row.cache_cid:
-                        cid = row.cache_cid
-                    else:
-                        cid = "prov-" + hashlib.sha256(
-                            f"{row.paper_id}\x00{row.local_id}".encode()
-                        ).hexdigest()[:12]
-                    for n in names:
-                        populate(cid, n)
-                out.append((ec, "assign", row.paper_id, row.local_id, cid))
-            out.extend((ec, "index", k, None, v) for k, v in idx.items())
-            yield pd.DataFrame(out, columns=["entity_class", "row_type", "a", "b", "cid"])
+        for row in pdf.itertuples(index=False):
+            name = row.name or ""
+            # raw-lower key is NOT stripped on lookup (dedup.py:316)
+            cid = idx.get(name.lower())
+            if cid is None:
+                cid = idx.get(_dedup_norm(name))
+            if cid is None:
+                syns = row.synonyms if row.synonyms is not None else []
+                names = {name} | set(syns)
+                if row.auth_id:
+                    cid = row.auth_id
+                elif row.cache_cid:
+                    cid = row.cache_cid
+                else:
+                    cid = "prov-" + hashlib.sha256(
+                        f"{row.paper_id}\x00{row.local_id}".encode()
+                    ).hexdigest()[:12]
+                for n in names:
+                    populate(cid, n)
+            out.append((ec, "assign", row.paper_id, row.local_id, cid))
+        out.extend((ec, "index", k, None, v) for k, v in idx.items())
+        return pd.DataFrame(out, columns=["entity_class", "row_type", "a", "b", "cid"])
 
     return entities_with_cache.select(
         "paper_id", "pos", "local_id", "entity_class", "name", "synonyms", "auth_id", "cache_cid"
@@ -271,11 +271,11 @@ def same_as_ordered_mapping(edges: DataFrame, local_threshold: int = 200_000) ->
     comp = labels.withColumnRenamed("id", "src").withColumnRenamed("component", "comp")
     tagged = edges.join(comp, "src")
 
-    def fold(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["paper_id", "pos"], kind="mergesort")
-            out = _replay_same_as(list(zip(pdf["src"], pdf["dst"])))
-            yield pd.DataFrame(out, columns=["entity_id", "final_id"])
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        # whole component in one frame (see assign_merge_keys)
+        pdf = pdf.sort_values(["paper_id", "pos"], kind="mergesort")
+        out = _replay_same_as(list(zip(pdf["src"], pdf["dst"])))
+        return pd.DataFrame(out, columns=["entity_id", "final_id"])
 
     return tagged.groupBy("comp").applyInPandas(
         fold, schema="entity_id string, final_id string"

@@ -12,6 +12,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Session-level settings every entry point applies (master, memory and
+# executors belong to spark-submit or the local factory below). The
+# broadcast threshold covers the KB dictionary / constraint dimensions,
+# which are at most a few MB.
+SESSION_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
+
 
 def get_spark(
     app_name: str = "kgraph_spark",
@@ -39,19 +53,10 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
-        # broadcast threshold: KB dict / constraint dims are ≤ few MB
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(map={**SESSION_CONF, **(extra_conf or {})})
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
@@ -81,6 +86,27 @@ def _parse_bytes(v: str) -> int:
     return int(float(s)) * mult
 
 
+def _local_file_sizes(files: list[str]) -> list[int] | None:
+    """Sizes of `files` (DataFrame.inputFiles() URIs), or None when any of
+    them lives on a remote store we cannot stat. inputFiles() percent-encodes
+    local paths (file:/data/my%20corpus/x.parquet), so the decoded path is
+    the one stat'ed; a transiently unreadable LOCAL file counts as 0 bytes
+    rather than as "remote" — a remote sentinel would silently force-enable
+    salting, or skip the repartition guard, on a small local input."""
+    import urllib.parse
+
+    sizes = []
+    for uri in files:
+        parsed = urllib.parse.urlparse(uri)
+        if parsed.scheme not in ("", "file"):
+            return None
+        try:
+            sizes.append(os.path.getsize(urllib.parse.unquote(parsed.path) or uri))
+        except OSError:
+            sizes.append(0)
+    return sizes
+
+
 def estimated_scan_bytes(df) -> int | None:
     """Total on-disk bytes behind a file-backed DataFrame (None for
     in-memory frames; a large sentinel for remote stores we cannot stat —
@@ -88,26 +114,11 @@ def estimated_scan_bytes(df) -> int | None:
     estimated_scan_partitions this does NOT depend on the session's
     maxPartitionBytes, so size thresholds keep their documented meaning
     under bench/test configs that shrink the split size."""
-    import urllib.parse
-
     files = df.inputFiles()
     if not files:
         return None
-    total = 0
-    for uri in files:
-        parsed = urllib.parse.urlparse(uri)
-        if parsed.scheme not in ("", "file"):
-            return 1 << 50  # remote store: assume scale-adequate input
-        # inputFiles() percent-encodes (file:/data/my%20corpus/x.parquet);
-        # stat the decoded path, and treat a transiently unreadable LOCAL
-        # file as 0 bytes rather than as "remote" — the sentinel would
-        # silently force-enable salting on a small local input
-        p = urllib.parse.unquote(parsed.path) or uri
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            continue
-    return total
+    sizes = _local_file_sizes(files)
+    return 1 << 50 if sizes is None else sum(sizes)
 
 
 def scan_partitions_or_slices(df) -> int:
@@ -139,20 +150,14 @@ def estimated_scan_partitions(df) -> int | None:
     test inputs, and a corpus on a remote store at real scale always has
     ≥ cores splits — forcing a corpus-sized shuffle because we could not
     stat it would be the exact regression the guard avoids."""
-    import urllib.parse
-
     files = df.inputFiles()
     if not files:
         return None
+    sizes = _local_file_sizes(files)
+    if sizes is None:
+        return 1 << 30  # remote store: assume scale-adequate splits
     conf = df.sparkSession.conf
     maxpb = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
     open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes", "4194304b"))
-    total_cost = 0
-    for uri in files:
-        p = urllib.parse.urlparse(uri).path or uri
-        try:
-            size = os.path.getsize(p)
-        except OSError:
-            return 1 << 30  # remote store: assume scale-adequate splits
-        total_cost += size + open_cost
+    total_cost = sum(sizes) + open_cost * len(sizes)
     return max(1, -(-total_cost // maxpb))

@@ -194,3 +194,24 @@ def test_estimated_scan_bytes(spark, tmp_path):
     )
     got = estimated_scan_bytes(spark.read.parquet(out))
     assert got == on_disk and got > 0
+
+
+def test_scan_estimates_decode_percent_encoded_paths(spark, tmp_path):
+    """inputFiles() percent-encodes local paths (file:/.../my%20corpus/...);
+    both scan probes must stat the decoded path rather than take the input
+    for a remote store (a remote sentinel skips run_pipeline's repartition
+    guard)."""
+    import os
+
+    from kgraph_spark.session import estimated_scan_bytes, estimated_scan_partitions
+
+    out = str(tmp_path / "my corpus")
+    spark.range(1000).coalesce(1).write.parquet(out)
+    df = spark.read.parquet(out)
+    assert any("%20" in f for f in df.inputFiles())
+    assert estimated_scan_partitions(df) == 1
+    on_disk = sum(
+        os.path.getsize(os.path.join(out, f))
+        for f in os.listdir(out) if f.endswith(".parquet")
+    )
+    assert estimated_scan_bytes(df) == on_disk > 0

@@ -137,7 +137,7 @@ def test_spark_submit_checkpoint_resume(tmp_path):
     first = run(["--fail-after-shards", "3"])
     assert first.returncode != 0  # the simulated kill propagates
     committed = sorted((ckpt / "extracted").glob("shard=*/_SUCCESS"))
-    assert len(committed) >= 3
+    assert len(committed) == 3
     mtimes = {p: p.stat().st_mtime_ns for p in committed}
 
     second = run([])
@@ -149,3 +149,8 @@ def test_spark_submit_checkpoint_resume(tmp_path):
     for p, m in mtimes.items():
         assert p.stat().st_mtime_ns == m, f"shard recomputed: {p}"
     assert len(sorted((ckpt / "extracted").glob("shard=*/_SUCCESS"))) == 6
+    # the relationships table is written once, into the bundle; the job's
+    # triple count is the manifest's
+    manifest = json.loads((tmp_path / "bundle" / "manifest.json").read_text())
+    assert manifest["counts"] == {"relationships": rec["triples"]}
+    assert sorted(p.name for p in ckpt.iterdir()) == ["extracted", "lineage", "metrics"]

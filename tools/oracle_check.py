@@ -9,8 +9,9 @@ Usage: python tools/oracle_check.py q1 q2 ... [--sf /root/testdata/sf0.001 ...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb  # noqa: E402
 
